@@ -23,7 +23,14 @@ oracle SQL — see SURVEY.md §7):
   * z thresholds: z <= -2 → BUY, z >= +2 → SELL, else HOLD;
   * first-day lag-nulls stay NULL (A4 sales, A6 inflation);
   * all floor ties count toward floor quantity (A5);
-  * stddev is the sample flavor.
+  * stddev is the sample flavor;
+  * gold values do not depend on silver retention: a pipeline refresh
+    derives A3/A4/A6 from the persisted daily summary (A1) through the
+    `*_from_daily` / `index_*` kernels below, which the silver-fed
+    operators share, so a lookback sees the item's earlier days whether
+    or not silver still holds them (plans/pipeline.py);
+  * A7 takes item_class from the dim as of the day's own refresh: a
+    later enrichment does not move past days' rows.
 
 Scale design: every operator is a single groupBy or window over the fact
 table — one shuffle each, partial aggregation map-side, no driver
@@ -174,6 +181,7 @@ def hourly_ohlc(ticks: DataFrame, dim: DataFrame | None = None) -> DataFrame:
 
 Z_BUY = -2.0
 Z_SELL = 2.0
+LOOKBACK_DAYS = 6  # the "7-day" frames of A3 and A4 are [date - 6, date]
 
 
 def _day_number(col: str = "snapshot_date") -> Column:
@@ -203,10 +211,18 @@ def rolling_zscore(
         .select("item_id", "snapshot_date", "current_price")
         .dropDuplicates()
     )
+    return _denormalize(zscore_from_daily(daily, decimals), dim)
+
+
+def zscore_from_daily(daily: DataFrame, decimals: int = 2) -> DataFrame:
+    """A3's rolling kernel over the daily grain
+    (item_id, snapshot_date, current_price): the rolling_zscore columns
+    for every row of `daily`. A row's value depends only on the item's
+    rows in its own [date - 6, date] calendar frame."""
     w = (
         Window.partitionBy("item_id")
         .orderBy(_day_number())
-        .rangeBetween(-6, Window.currentRow)
+        .rangeBetween(-LOOKBACK_DAYS, Window.currentRow)
     )
     x0 = int_units("current_price", decimals)
     n = F.count("current_price").over(w).cast("double")
@@ -215,7 +231,7 @@ def rolling_zscore(
     var = (sxx - sx * sx / n) / (n - F.lit(1.0))
     scale = float(10**decimals)
 
-    out = (
+    return (
         daily.withColumn(
             "avg_price_7d",
             F.sum(dec("current_price", 2)).over(w).cast("double")
@@ -239,7 +255,6 @@ def rolling_zscore(
             .otherwise("HOLD"),
         )
     )
-    return _denormalize(out, dim)
 
 
 # ---------------------------------------------------------------------------
@@ -265,11 +280,19 @@ def sales_velocity(silver: DataFrame, dim: DataFrame | None = None) -> DataFrame
         .select("item_id", "snapshot_date", "stock_on_book")
         .dropDuplicates()
     )
+    return _denormalize(velocity_from_daily(daily), dim)
+
+
+def velocity_from_daily(daily: DataFrame) -> DataFrame:
+    """A4's kernel over the daily grain (item_id, snapshot_date,
+    stock_on_book): the sales_velocity columns for every row of `daily`.
+    A row's lag is the item's previous row in `daily`, however old, so
+    `daily` must hold the item's whole history up to the rows wanted."""
     w_ord = Window.partitionBy("item_id").orderBy(_day_number())
     w_range = (
         Window.partitionBy("item_id")
         .orderBy(_day_number())
-        .rangeBetween(-6, Window.currentRow)
+        .rangeBetween(-LOOKBACK_DAYS, Window.currentRow)
     )
     prev = F.lag("stock_on_book").over(w_ord)
     sales = F.when(
@@ -279,7 +302,7 @@ def sales_velocity(silver: DataFrame, dim: DataFrame | None = None) -> DataFrame
         F.sum(F.col("stock_on_book").cast("decimal(28,0)")).over(w_range).cast("double")
         / F.count("stock_on_book").over(w_range)
     )
-    out = (
+    return (
         daily.withColumn("estimated_daily_sales", sales)
         .withColumn("avg_daily_stock", avg_stock)
         .withColumn(
@@ -289,7 +312,6 @@ def sales_velocity(silver: DataFrame, dim: DataFrame | None = None) -> DataFrame
             * 100.0,
         )
     )
-    return _denormalize(out, dim)
 
 
 # ---------------------------------------------------------------------------
@@ -356,10 +378,21 @@ def market_index(silver: DataFrame) -> DataFrame:
     per_item = tagged.groupBy("snapshot_date", "item_id").agg(
         _median_agg().alias("median_price")
     )
-    per_day = per_item.groupBy("snapshot_date").agg(
+    return index_with_inflation(index_from_medians(per_item))
+
+
+def index_from_medians(per_item: DataFrame) -> DataFrame:
+    """A6's daily rollup: (snapshot_date, item_id, median_price) rows to
+    one (snapshot_date, items_in_index, index_value) row per date."""
+    return per_item.groupBy("snapshot_date").agg(
         F.count(F.lit(1)).alias("items_in_index"),
         (F.sum(dec("median_price")).cast("double") / F.count(F.lit(1))).alias("index_value"),
     )
+
+
+def index_with_inflation(per_day: DataFrame) -> DataFrame:
+    """A6's day-over-day kernel: inflation_pct_daily of each date against
+    the previous date in `per_day`."""
     w = Window.orderBy("snapshot_date")
     return per_day.withColumn(
         "inflation_pct_daily",

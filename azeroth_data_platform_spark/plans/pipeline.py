@@ -6,9 +6,27 @@ transformation.py:13-15, dimensions.py:11) with plain composed jobs:
 lineage is the DataFrame plan, run metadata is the returned dict, and
 idempotency comes from the merge semantics (sources/merge.py).
 
-One run = the reference's materialization order:
-  bronze ingest (edge, optional) → silver merge → dim enrichment →
-  gold materializations → retention.
+One run refreshes one day D, in the reference's materialization order:
+  1. silver merge: the day's bronze dump, insert-if-absent on `id`;
+  2. dim enrichment: items in silver missing from `dim_items`;
+  3. gold, computed and written for D only (plus, for a day older than
+     gold's newest, the later dates the windowed tables depend on):
+       gold_market_summary (A1), gold_market_concentration (A5) and
+       gold_sector_trends (A7) from silver rows with snapshot_date = D;
+       A7 joins the dim as of this run, so a past day keeps the item
+       class it had on its own refresh;
+       gold_safe_investments (A3) from A1's min_buyout over [D-6, D];
+       gold_sales_velocity (A4) from A1's quantity_available, its lag
+       being the item's previous A1 row;
+       gold_market_index (A6) from A1's median_buyout on D, its lag
+       being the previous gold_market_index row;
+  4. retention: silver rows older than `retention_days` are deleted.
+
+A1 is the persisted daily grain and is never dropped, so gold values do
+not depend on `retention_days` or on how many refreshes came before: a
+refresh equals a full `GOLD_JOBS` build over the complete silver history,
+restricted to the dates it writes. `GOLD_JOBS` is that full build, used
+to bulk-load a warehouse and by the SQL catalog.
 """
 
 from __future__ import annotations
@@ -18,7 +36,7 @@ import logging
 import os
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import gold, joins, silver
@@ -27,9 +45,11 @@ from ..sources.readers import read_bronze_auctions
 
 log = logging.getLogger(__name__)
 
+ZSCORE_DECIMALS = 0  # A3 accumulates whole-copper price units
+
 GOLD_JOBS = {
     "gold_market_summary": lambda s, dim: gold.daily_market_summary(s),
-    "gold_safe_investments": lambda s, dim: gold.rolling_zscore(s, decimals=0),
+    "gold_safe_investments": lambda s, dim: gold.rolling_zscore(s, decimals=ZSCORE_DECIMALS),
     "gold_sales_velocity": lambda s, dim: gold.sales_velocity(s),
     "gold_market_concentration": lambda s, dim: gold.market_concentration(s),
     "gold_market_index": lambda s, dim: gold.market_index(s),
@@ -47,7 +67,8 @@ def run_pipeline(
 ) -> dict[str, Any]:
     """Materialize one snapshot end-to-end; returns run metadata (the
     reference emits the same counts as Dagster metadata —
-    ingestion.py:44-51, transformation.py:77-84)."""
+    ingestion.py:44-51, transformation.py:77-84). ``meta["gold_dates"]``
+    maps each gold table to the ISO dates this run wrote."""
     meta: dict[str, Any] = {"snapshot_date": str(snapshot_date)}
     silver_path = os.path.join(warehouse, "silver_auctions")
     dim_path = os.path.join(warehouse, "dim_items")
@@ -70,9 +91,6 @@ def run_pipeline(
         spark, silver_path, batch, key="id", prune_col="id"
     )
     silver_df = spark.read.parquet(silver_path)
-    # One silver scan feeds every gold job in this run (reference re-reads
-    # Postgres per asset; SURVEY.md §4 caching row).
-    silver_df.cache()
 
     # --- dim enrichment (J1 → S11 → S7), driver-side by design ---
     if item_fetch is not None:
@@ -101,22 +119,87 @@ def run_pipeline(
         if os.path.exists(dim_path)
         else None
     )
-    for name, job in GOLD_JOBS.items():
-        if name == "gold_sector_trends" and dim_df is None:
-            continue
-        out = job(silver_df, dim_df)
-        merge.overwrite_partitions(
-            spark,
-            os.path.join(warehouse, name),
-            out.withColumn("p_date", F.col("snapshot_date")),
-            "p_date",
-        )
-        meta[name] = "materialized"
+    day_slice = silver_df.where(F.col("snapshot_date") == F.lit(snapshot_date))
+    meta["gold_dates"] = _refresh_gold(spark, warehouse, snapshot_date, day_slice, dim_df)
 
     # --- retention (S9) ---
     cutoff = snapshot_date - dt.timedelta(days=retention_days)
     meta["retention_deleted"] = merge.retention_delete(
         spark, silver_path, f"snapshot_date < DATE '{cutoff}'"
     )
-    silver_df.unpersist()
     return meta
+
+
+def _partition_dates(table: str) -> list[dt.date]:
+    """The p_date partitions a gold table holds, sorted."""
+    if not os.path.isdir(table):
+        return []
+    return sorted(
+        dt.date.fromisoformat(name.split("=", 1)[1])
+        for name in os.listdir(table)
+        if name.startswith("p_date=")
+    )
+
+
+def _refresh_gold(
+    spark: SparkSession,
+    warehouse: str,
+    day: dt.date,
+    day_slice: DataFrame,
+    dim_df: DataFrame | None,
+) -> dict[str, list[str]]:
+    """Compute and write gold for `day` from `day_slice` (silver rows with
+    snapshot_date = day); returns the dates written, per table.
+
+    A day older than the newest one in gold also rewrites the windowed
+    tables (A3, A4, A6) for every later date gold holds, since their
+    lookback now includes `day`."""
+    written: dict[str, list[str]] = {}
+
+    def table(name: str) -> str:
+        return os.path.join(warehouse, name)
+
+    def write(name: str, df: DataFrame, dates: list[dt.date]) -> None:
+        merge.overwrite_partitions(
+            spark, table(name), df.withColumn("p_date", F.col("snapshot_date")), "p_date"
+        )
+        written[name] = [str(d) for d in dates]
+
+    dates = sorted(
+        {day, *(d for d in _partition_dates(table("gold_market_summary")) if d > day)}
+    )
+    for name in ("gold_market_summary", "gold_market_concentration", "gold_sector_trends"):
+        if name == "gold_sector_trends" and dim_df is None:
+            continue
+        write(name, GOLD_JOBS[name](day_slice, dim_df), [day])
+
+    summary = spark.read.parquet(table("gold_market_summary"))
+    wanted = F.col("snapshot_date").isin(dates)
+    first = day - dt.timedelta(days=gold.LOOKBACK_DAYS)
+    floor = summary.where(F.col("p_date") >= F.lit(first)).select(
+        "item_id", "snapshot_date", F.col("min_buyout").alias("current_price")
+    )
+    write(
+        "gold_safe_investments",
+        gold.zscore_from_daily(floor, ZSCORE_DECIMALS).where(wanted),
+        dates,
+    )
+    stock = summary.select(
+        "item_id", "snapshot_date", F.col("quantity_available").alias("stock_on_book")
+    )
+    write("gold_sales_velocity", gold.velocity_from_daily(stock).where(wanted), dates)
+
+    per_day = gold.index_from_medians(
+        summary.where(F.col("p_date").isin(dates)).select(
+            "snapshot_date", "item_id", F.col("median_buyout").alias("median_price")
+        )
+    )
+    before = [d for d in _partition_dates(table("gold_market_index")) if d < day]
+    if before:
+        per_day = per_day.unionByName(
+            spark.read.parquet(table("gold_market_index"))
+            .where(F.col("p_date") == F.lit(before[-1]))
+            .select("snapshot_date", "items_in_index", "index_value")
+        )
+    write("gold_market_index", gold.index_with_inflation(per_day).where(wanted), dates)
+    return written

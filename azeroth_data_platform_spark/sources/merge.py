@@ -146,9 +146,16 @@ def overwrite_partitions(
     spark: SparkSession, target: str, batch: DataFrame, partition_col: str
 ) -> None:
     """X5: deterministic partition replacement (Delta ``replaceWhere``) —
-    re-running a day's job replaces exactly that day's partition."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    batch.write.mode("overwrite").partitionBy(partition_col).parquet(target)
+    re-running a day's job replaces exactly that day's partition, and
+    partitions absent from `batch` are left as they are. The dynamic mode
+    is a per-write option, so the session's other overwrites stay full
+    overwrites."""
+    (
+        batch.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target)
+    )
 
 
 RETENTION_DAYS = 30

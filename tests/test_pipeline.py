@@ -6,11 +6,12 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 
 from azeroth_data_platform_spark.operators.silver import silver_transform
-from azeroth_data_platform_spark.plans.pipeline import run_pipeline
+from azeroth_data_platform_spark.plans.pipeline import GOLD_JOBS, run_pipeline
 from azeroth_data_platform_spark.sources import merge, rest
 from azeroth_data_platform_spark.sources.readers import read_bronze_auctions
 
@@ -148,10 +149,147 @@ def test_run_pipeline_end_to_end(spark, tmp_path, bronze_path):
     assert dim[2589].item_subclass == "Junk"  # default applied
     gold = spark.read.parquet(f"{wh}/gold_market_summary")
     assert gold.count() == 3  # three distinct items on the snapshot date
-    # re-run the same day: silver unchanged (idempotent), gold rebuilt
+    before = _gold_rows(spark, wh)
+    # re-run the same day: silver unchanged (idempotent), gold recomputed
+    # to the same values
     meta2 = run_pipeline(spark, bronze_path, wh, SNAP, item_fetch=_fake_item_fetch)
     assert meta2["silver_inserted"] == 0
-    assert spark.read.parquet(f"{wh}/gold_market_summary").count() == 3
+    assert meta2["gold_dates"] == meta["gold_dates"] == {t: [str(SNAP)] for t in GOLD_JOBS}
+    assert _gold_rows(spark, wh) == before
+
+
+GOLD_TABLES = tuple(GOLD_JOBS)
+
+
+def _gold_rows(spark, wh: str) -> dict[str, list[tuple]]:
+    """Every gold table's rows, sorted, without the partition column."""
+    return {
+        t: sorted(
+            (tuple(r) for r in spark.read.parquet(f"{wh}/{t}").drop("p_date").collect()),
+            key=repr,
+        )
+        for t in GOLD_TABLES
+    }
+
+
+def _gold_files(wh: str) -> dict[str, bytes]:
+    """Relative path -> bytes of every file under the gold tables."""
+    out = {}
+    for t in GOLD_TABLES:
+        root = os.path.join(wh, t)
+        for d, _, files in os.walk(root):
+            for f in files:
+                full = os.path.join(d, f)
+                with open(full, "rb") as fh:
+                    out[os.path.relpath(full, wh)] = fh.read()
+    return out
+
+
+def _bronze_day(root, day: dt.date, auctions: list[dict]) -> str:
+    p = root / str(day)
+    p.mkdir()
+    (p / f"raw_auctions_{day}.json").write_text(json.dumps({"auctions": auctions}))
+    return str(p)
+
+
+def _auctions(day_no: int, items: list[int]) -> list[dict]:
+    return [
+        {"id": 1000 * day_no + k, "item": {"id": iid}, "unit_price": 100 * day_no + 7 * k,
+         "quantity": 1 + k, "time_left": "LONG"}
+        for k, iid in enumerate(items)
+    ]
+
+
+def test_refresh_leaves_older_gold_partitions_untouched(spark, tmp_path, monkeypatch):
+    """A refresh writes one new partition per gold table and leaves every
+    older partition byte-identical; A3's history read of the daily
+    summary is a partition-pruned slice, not the whole table."""
+    from azeroth_data_platform_spark.operators import gold
+
+    wh = str(tmp_path / "wh")
+    days = [SNAP + dt.timedelta(days=k) for k in range(3)]
+    for k, day in enumerate(days[:2]):
+        run_pipeline(spark, _bronze_day(tmp_path, day, _auctions(k + 1, [19019, 2589, 2589])),
+                     wh, day, item_fetch=_fake_item_fetch)
+    old = _gold_files(wh)
+    assert any("p_date=" in f for f in old)
+
+    seen = []
+    real_kernel = gold.zscore_from_daily
+
+    def spy(daily, *a, **kw):
+        seen.append(daily)
+        return real_kernel(daily, *a, **kw)
+
+    monkeypatch.setattr(gold, "zscore_from_daily", spy)
+    meta = run_pipeline(spark, _bronze_day(tmp_path, days[2], _auctions(3, [19019, 777])),
+                        wh, days[2], item_fetch=_fake_item_fetch)
+    assert meta["gold_dates"] == {t: [str(days[2])] for t in GOLD_TABLES}
+    new = _gold_files(wh)
+    assert {f: new[f] for f in old} == old
+    added_parts = {os.path.dirname(f) for f in set(new) - set(old)}
+    assert added_parts == {f"{t}/p_date={days[2]}" for t in GOLD_TABLES}
+
+    [history] = seen
+    plan = history._jdf.queryExecution().executedPlan().toString()
+    assert "p_date" in plan.split("PartitionFilters: [")[1].split("]")[0]
+
+
+def test_sector_trends_keep_the_class_of_their_own_refresh(spark, tmp_path):
+    """An item unknown to the item API on day 1 and enriched on day 2
+    keeps its day-1 sector row under the NULL class; day 2 files it
+    under its class."""
+    known: set[int] = {2589}
+
+    def fetch(url: str):
+        item_id = int(url.rsplit("/", 1)[1])
+        if item_id not in known:
+            return 404, None
+        return 200, {"name": f"Item {item_id}", "item_class": {"name": "Gem"}}
+
+    wh = str(tmp_path / "wh")
+    d1, d2 = SNAP, SNAP + dt.timedelta(days=1)
+    run_pipeline(spark, _bronze_day(tmp_path, d1, _auctions(1, [2589, 5000])), wh, d1,
+                 item_fetch=fetch)
+    known.add(5000)
+    meta = run_pipeline(spark, _bronze_day(tmp_path, d2, _auctions(2, [2589, 5000])), wh, d2,
+                        item_fetch=fetch)
+    assert meta["dim_enriched"] == 1
+    rows = {
+        (r.snapshot_date, r.item_class): r.distinct_items
+        for r in spark.read.parquet(f"{wh}/gold_sector_trends").collect()
+    }
+    assert rows == {(d1, "Gem"): 1, (d1, None): 1, (d2, "Gem"): 2}
+
+
+def test_failed_refresh_leaves_no_cached_data(spark, tmp_path, bronze_path):
+    """A refresh whose item fetch raises keeps no persisted RDD behind."""
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    def fetch(url: str):
+        raise ConnectionError("item API down")
+
+    held = persistent()
+    with pytest.raises(ConnectionError):
+        run_pipeline(spark, bronze_path, str(tmp_path / "wh"), SNAP, item_fetch=fetch)
+    assert persistent() == held
+
+
+def test_overwrite_partitions_leaves_full_overwrites_full(spark, tmp_path):
+    """The dynamic mode of a gold write is per write: a later
+    write_partitioned still replaces the whole table."""
+    from azeroth_data_platform_spark.sources.writers import write_partitioned
+
+    gold_t, t = str(tmp_path / "gold"), str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "v long, p string")
+    merge.overwrite_partitions(spark, gold_t, df.where("p = 'a'"), "p")
+    merge.overwrite_partitions(spark, gold_t, df.where("p = 'b'"), "p")
+    assert sorted(d for d in os.listdir(gold_t) if d.startswith("p=")) == ["p=a", "p=b"]
+    write_partitioned(df.where("p IN ('a', 'b')"), t, "p")
+    write_partitioned(df.where("p = 'c'"), t, "p")
+    assert sorted(d for d in os.listdir(t) if d.startswith("p=")) == ["p=c"]
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper() == "STATIC"
 
 
 def test_run_pipeline_empty_batch_guard(spark, tmp_path):
@@ -536,3 +674,49 @@ def test_chunk_documents_rejects_bad_overlap(spark):
     )
     with pytest.raises(ValueError):
         corpus.chunk_documents(docs, size=10, overlap=10)
+
+
+def _perfbench_gen():
+    """The benchmark's seeded bronze generator, loaded from its file."""
+    import importlib.util
+    import sys
+
+    name = "perfbench_gen"
+    if name not in sys.modules:
+        path = os.path.join(os.path.dirname(__file__), os.pardir, "perfbench", "gen.py")
+        spec = importlib.util.spec_from_file_location(name, path)
+        sys.modules[name] = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(sys.modules[name])
+    return sys.modules[name]
+
+
+def test_gold_does_not_depend_on_retention(spark, tmp_path):
+    """Replaying generated days, one of them backfilled out of order, at a
+    2-day and at a 1000-day silver retention leaves the same six gold
+    tables, equal to a full GOLD_JOBS build over the complete silver."""
+    gen = _perfbench_gen()
+    days = gen.generate_bronze(
+        str(tmp_path / "bronze"), 7,
+        gen.BronzeSpec(history_days=4, auctions_per_day=40, catalog_items=25,
+                       new_items_per_day=2),
+    )
+    order = days[:2] + [days[3], days[2], days[4]]  # day 2 arrives after day 3
+    got = {}
+    for retention in (2, 1000):
+        wh = str(tmp_path / f"wh{retention}")
+        for d in order:
+            meta = run_pipeline(spark, d.path, wh, d.day, item_fetch=gen.item_fetch,
+                                retention_days=retention)
+        got[retention] = _gold_rows(spark, wh)
+    assert meta["gold_dates"]["gold_market_summary"] == [str(days[4].day)]
+
+    silver = spark.read.parquet(str(tmp_path / "wh1000" / "silver_auctions"))
+    dim = spark.read.parquet(str(tmp_path / "wh1000" / "dim_items"))
+    full = {
+        t: sorted((tuple(r) for r in job(silver, dim).collect()), key=repr)
+        for t, job in GOLD_JOBS.items()
+    }
+    assert len(full["gold_market_index"]) == len(days)
+    for t in GOLD_TABLES:
+        assert got[2][t] == full[t], t
+        assert got[1000][t] == full[t], t
