@@ -27,6 +27,17 @@ not depend on `retention_days` or on how many refreshes came before: a
 refresh equals a full `GOLD_JOBS` build over the complete silver history,
 restricted to the dates it writes. `GOLD_JOBS` is that full build, used
 to bulk-load a warehouse and by the SQL catalog.
+
+At a daily batch's size a refresh costs Spark jobs, not rows, so it runs
+as few as it can. The day's bronze is parsed once: the silver batch is
+materialized (lifecycle pool, released on every path) and the empty
+guard, the merge's prune bound, anti-join and append read its blocks.
+Tables are read with declared schemas (silver with the batch's, the dim
+with `DIM_SCHEMA`, gold with the schema of the frame written), so no job
+reads parquet footers to infer one. The enriched dim rows become a local
+relation (`dim_frame`), which Catalyst sizes and broadcasts without
+Python workers, and whose naive `last_updated` stamps read as UTC
+whatever the process's time zone.
 """
 
 from __future__ import annotations
@@ -36,9 +47,12 @@ import logging
 import os
 from typing import Any
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType, TimestampType
 
+from ..functions import lifecycle
 from ..operators import gold, joins, silver
 from ..sources import merge, rest
 from ..sources.readers import read_bronze_auctions
@@ -46,6 +60,15 @@ from ..sources.readers import read_bronze_auctions
 log = logging.getLogger(__name__)
 
 ZSCORE_DECIMALS = 0  # A3 accumulates whole-copper price units
+
+DIM_SCHEMA = StructType(
+    [StructField("item_id", LongType())]
+    + [
+        StructField(name, StringType())
+        for name in ("name", "quality", "item_class", "item_subclass", "icon_url")
+    ]
+    + [StructField("last_updated", TimestampType())]
+)
 
 GOLD_JOBS = {
     "gold_market_summary": lambda s, dim: gold.daily_market_summary(s),
@@ -74,34 +97,37 @@ def run_pipeline(
     dim_path = os.path.join(warehouse, "dim_items")
 
     # --- silver (S5 + P* + S6 idempotent merge) ---
-    bronze = read_bronze_auctions(spark, bronze_path)
-    batch = silver.silver_transform(bronze, snapshot_date)
-    if batch.isEmpty():  # F5 empty-input guard (transformation.py:28-30)
-        log.warning("empty bronze batch for %s — skipping", snapshot_date)
-        meta["silver_inserted"] = 0
-        return meta
-    # The reference's conflict target is `id` ALONE (on_conflict_do_nothing,
-    # postgres_client.py:39) — a composite (id, snapshot_date) key would
-    # re-insert persisting auctions daily, changing semantics. So the
-    # scale-safe bounded probe prunes on `id` itself: exact (id IS the key),
-    # and the existing-side scan reads only row groups whose id min/max
-    # stats overlap the batch's id range — a bounded probe, not a
-    # full-table pass, since auction ids correlate with write order.
-    meta["silver_inserted"] = merge.insert_if_absent(
-        spark, silver_path, batch, key="id", prune_col="id"
+    # The day's JSON is parsed once: the empty guard, the prune bound, the
+    # anti-join and the append all read the materialized blocks.
+    batch = lifecycle.materialize(
+        silver.silver_transform(read_bronze_auctions(spark, bronze_path), snapshot_date)
     )
-    silver_df = spark.read.parquet(silver_path)
+    silver_schema = batch.schema
+    try:
+        if batch.isEmpty():  # F5 empty-input guard (transformation.py:28-30)
+            log.warning("empty bronze batch for %s — skipping", snapshot_date)
+            meta["silver_inserted"] = 0
+            return meta
+        # The reference's conflict target is `id` ALONE (on_conflict_do_nothing,
+        # postgres_client.py:39) — a composite (id, snapshot_date) key would
+        # re-insert persisting auctions daily, changing semantics. So the
+        # scale-safe bounded probe prunes on `id` itself: exact (id IS the key),
+        # and the existing-side scan reads only row groups whose id min/max
+        # stats overlap the batch's id range — a bounded probe, not a
+        # full-table pass, since auction ids correlate with write order.
+        meta["silver_inserted"] = merge.insert_if_absent(
+            spark, silver_path, batch, key="id", prune_col="id"
+        )
+    finally:
+        lifecycle.release(batch)
+    silver_df = spark.read.schema(silver_schema).parquet(silver_path)
 
     # --- dim enrichment (J1 → S11 → S7), driver-side by design ---
     if item_fetch is not None:
         dim = (
-            spark.read.parquet(dim_path)
+            spark.read.schema(DIM_SCHEMA).parquet(dim_path)
             if os.path.exists(dim_path)
-            else spark.createDataFrame(
-                [],
-                "item_id long, name string, quality string, item_class string, "
-                "item_subclass string, icon_url string, last_updated timestamp",
-            )
+            else dim_frame(spark, [])
         )
         missing = [
             r.item_id
@@ -110,12 +136,11 @@ def run_pipeline(
         enriched = rest.enrich_items(item_fetch, missing)
         meta["dim_enriched"] = len(enriched)
         if enriched:
-            batch_dim = spark.createDataFrame(enriched, schema=dim.schema)
-            merge.upsert(spark, dim_path, batch_dim, key="item_id")
+            merge.upsert(spark, dim_path, dim_frame(spark, enriched), key="item_id")
 
     # --- gold materializations ---
     dim_df = (
-        spark.read.parquet(dim_path)
+        spark.read.schema(DIM_SCHEMA).parquet(dim_path)
         if os.path.exists(dim_path)
         else None
     )
@@ -125,9 +150,17 @@ def run_pipeline(
     # --- retention (S9) ---
     cutoff = snapshot_date - dt.timedelta(days=retention_days)
     meta["retention_deleted"] = merge.retention_delete(
-        spark, silver_path, f"snapshot_date < DATE '{cutoff}'"
+        spark, silver_path, f"snapshot_date < DATE '{cutoff}'", schema=silver_schema
     )
     return meta
+
+
+def dim_frame(spark: SparkSession, rows: list[dict[str, Any]]) -> DataFrame:
+    """`dim_items` rows as a local relation (Arrow from pandas), which
+    Catalyst can size and broadcast; ``createDataFrame(list)`` would plan
+    a Python RDD instead. Naive ``last_updated`` stamps are read in the
+    session time zone (UTC), not the process's."""
+    return spark.createDataFrame(pd.DataFrame(rows, columns=DIM_SCHEMA.names), DIM_SCHEMA)
 
 
 def _partition_dates(table: str) -> list[dt.date]:
@@ -155,14 +188,18 @@ def _refresh_gold(
     tables (A3, A4, A6) for every later date gold holds, since their
     lookback now includes `day`."""
     written: dict[str, list[str]] = {}
+    schemas: dict[str, StructType] = {}
 
     def table(name: str) -> str:
         return os.path.join(warehouse, name)
 
+    def partitioned(df: DataFrame) -> DataFrame:
+        return df.withColumn("p_date", F.col("snapshot_date"))
+
     def write(name: str, df: DataFrame, dates: list[dt.date]) -> None:
-        merge.overwrite_partitions(
-            spark, table(name), df.withColumn("p_date", F.col("snapshot_date")), "p_date"
-        )
+        out = partitioned(df)
+        merge.overwrite_partitions(spark, table(name), out, "p_date")
+        schemas[name] = out.schema
         written[name] = [str(d) for d in dates]
 
     dates = sorted(
@@ -173,7 +210,9 @@ def _refresh_gold(
             continue
         write(name, GOLD_JOBS[name](day_slice, dim_df), [day])
 
-    summary = spark.read.parquet(table("gold_market_summary"))
+    summary = spark.read.schema(schemas["gold_market_summary"]).parquet(
+        table("gold_market_summary")
+    )
     wanted = F.col("snapshot_date").isin(dates)
     first = day - dt.timedelta(days=gold.LOOKBACK_DAYS)
     floor = summary.where(F.col("p_date") >= F.lit(first)).select(
@@ -196,8 +235,11 @@ def _refresh_gold(
     )
     before = [d for d in _partition_dates(table("gold_market_index")) if d < day]
     if before:
+        # read with the schema of the frame this call writes
+        stored = partitioned(gold.index_with_inflation(per_day)).schema
         per_day = per_day.unionByName(
-            spark.read.parquet(table("gold_market_index"))
+            spark.read.schema(stored)
+            .parquet(table("gold_market_index"))
             .where(F.col("p_date") == F.lit(before[-1]))
             .select("snapshot_date", "items_in_index", "index_value")
         )

@@ -27,6 +27,8 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _exists(path: str) -> bool:
@@ -87,9 +89,17 @@ def insert_if_absent(
 
     `partition_by` lays the table out hive-partitioned on that column (and
     appends preserve the layout); pair it with prune_col so the bounded
-    read prunes PARTITIONS, not just row groups."""
+    read prunes PARTITIONS, not just row groups.
+
+    Spark jobs, not rows, price a daily batch, so the target is read with
+    ``batch.schema`` (no footer-reading inference job), the prune bound is
+    taken from the batch before its dedup shuffle, and the fresh rows are
+    materialized once: the returned count and the append share one pruned
+    scan of the target and one anti-join."""
+    from ..functions.lifecycle import materialize, release
+
     keys = [key] if isinstance(key, str) else list(key)
-    batch = batch.dropDuplicates(keys)
+    deduped = batch.dropDuplicates(keys)
 
     def _write(df: DataFrame, mode: str) -> None:
         w = df.write.mode(mode)
@@ -98,28 +108,29 @@ def insert_if_absent(
         w.parquet(target)
 
     if not _exists(target):
-        _write(batch, "overwrite")
-        return batch.count()
-    existing = spark.read.parquet(target).select(*keys)
+        _write(deduped, "overwrite")
+        return deduped.count()
+    existing = spark.read.schema(batch.schema).parquet(target).select(*keys)
     if prune_col is not None:
         if prune_col not in keys:
             raise ValueError(
                 f"prune_col {prune_col!r} must be one of the key columns {keys} "
                 "(otherwise pruning the existing side could miss conflicts)"
             )
-        import pyspark.sql.functions as F
-
         lo, hi = batch.agg(F.min(prune_col), F.max(prune_col)).first()
         if lo is None:  # empty batch: nothing to insert, nothing to read
             return 0
         existing = existing.where(
             (existing[prune_col] >= lo) & (existing[prune_col] <= hi)
         )
-    fresh = batch.join(existing, keys, "left_anti")
-    n = fresh.count()
-    if n:
-        _write(fresh, "append")
-    return n
+    fresh = materialize(deduped.join(existing, keys, "left_anti"))
+    try:
+        n = fresh.count()
+        if n:
+            _write(fresh, "append")
+        return n
+    finally:
+        release(fresh)
 
 
 def upsert(
@@ -127,19 +138,27 @@ def upsert(
 ) -> None:
     """S7: type-1 upsert — batch rows replace same-key target rows, new keys
     insert. Equivalent Delta: MERGE ... WHEN MATCHED UPDATE WHEN NOT
-    MATCHED INSERT."""
+    MATCHED INSERT.
+
+    The target is read with ``batch.schema`` (no inference job), so it
+    must hold the batch's columns: a column only the target has would be
+    dropped by the rewrite. The merged rows are
+    repartitioned by key before the staged rewrite, and AQE coalesces that
+    small shuffle to one file: without it a broadcast batch (a local
+    relation) leaves the scan's split layout in place and every upsert adds
+    files to the table."""
     batch = batch.dropDuplicates([key])
     if not _exists(target):
         batch.write.mode("overwrite").parquet(target)
         return
-    existing = spark.read.parquet(target)
+    existing = spark.read.schema(batch.schema).parquet(target)
     kept = existing.join(batch.select(key), key, "left_anti")
     # No materialization needed: _staged_rewrite writes to a staging dir
     # FIRST and only renames the old target aside after the write
     # completes, so the plan's own scan of `target` reads intact files —
     # one streaming pass, zero pinned blocks (r13; the old localCheckpoint
     # paid a full extra materialization of the merged table).
-    _staged_rewrite(kept.unionByName(batch), target)
+    _staged_rewrite(kept.unionByName(batch).repartition(key), target)
 
 
 def overwrite_partitions(
@@ -181,36 +200,40 @@ def retention_delete_older_than(
 
 
 def retention_delete(
-    spark: SparkSession, target: str, predicate: str
+    spark: SparkSession,
+    target: str,
+    predicate: str,
+    *,
+    schema: StructType | None = None,
 ) -> int:
     """S9: DELETE FROM target WHERE <predicate>; returns rows deleted.
 
     With a partitioned target prefer dropping whole partitions (free);
-    this row-level path is the faithful general fallback.
+    this row-level path is the faithful general fallback. Pass the table's
+    ``schema`` when the caller knows it, to skip the footer-reading
+    inference job.
 
-    The deleted count rides the single keep pass: ONE scan of the target
-    materializes a keep-marked relation (lifecycle.materialize — pooled,
-    deterministically released below, r13), both counts read the blocks,
-    and the rewrite streams the kept rows from them. The previous
-    implementation paid three target scans (total count, keep count,
-    rewrite). SQL three-valued logic note: WHERE NOT(p) drops p=NULL
-    rows, so they are deleted — total−kept counts them correctly."""
+    ONE scan of the target materializes a keep-marked relation
+    (lifecycle.materialize — pooled, deterministically released below,
+    r13); a single count of the deleted rows reads the blocks, and the
+    rewrite streams the kept rows from them, so both see the same
+    evaluation of the predicate. SQL three-valued logic: a row whose
+    predicate is NULL is neither kept nor spared — ``coalesce(NOT p,
+    false)`` marks it deleted, and it is counted."""
     if not _exists(target):
         return 0
-    import pyspark.sql.functions as F
-
     from ..functions.lifecycle import materialize, release
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     marked = materialize(
-        spark.read.parquet(target)
-        .withColumn("_keep", F.expr(f"NOT ({predicate})"))
+        reader.parquet(target).withColumn(
+            "_keep", F.coalesce(F.expr(f"NOT ({predicate})"), F.lit(False))
+        )
     )  # the single target scan
     try:
-        keep = marked.where(F.col("_keep")).drop("_keep")
-        kept = keep.count()          # local: reads the blocks, not the table
-        deleted = marked.count() - kept
+        deleted = marked.where(~F.col("_keep")).count()
         if deleted:
-            _staged_rewrite(keep, target)
+            _staged_rewrite(marked.where(F.col("_keep")).drop("_keep"), target)
         return deleted
     finally:
         release(marked)

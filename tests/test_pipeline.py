@@ -4,12 +4,17 @@ bad numerics, empty batches, idempotent re-runs, dim upsert)."""
 
 from __future__ import annotations
 
+import calendar
 import datetime as dt
 import json
 import os
+import time
+import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
+from azeroth_data_platform_spark.functions import lifecycle
 from azeroth_data_platform_spark.operators.silver import silver_transform
 from azeroth_data_platform_spark.plans.pipeline import GOLD_JOBS, run_pipeline
 from azeroth_data_platform_spark.sources import merge, rest
@@ -94,13 +99,19 @@ def test_upsert_type1_overwrites_in_place(spark, tmp_path):
 
 
 def test_retention_delete(spark, tmp_path):
-    target = str(tmp_path / "t")
+    """A row whose predicate is NULL (NULL snapshot_date) is deleted and
+    counted, with or without a declared schema."""
     df = spark.createDataFrame(
-        [(1, dt.date(2026, 1, 1)), (2, dt.date(2026, 2, 1))], "id long, snapshot_date date"
+        [(1, dt.date(2026, 1, 1)), (2, dt.date(2026, 2, 1)), (3, None)],
+        "id long, snapshot_date date",
     )
-    df.write.parquet(target)
-    assert merge.retention_delete(spark, target, "snapshot_date < DATE '2026-01-15'") == 1
-    assert [r.id for r in spark.read.parquet(target).collect()] == [2]
+    for k, kw in enumerate(({}, {"schema": df.schema})):
+        target = str(tmp_path / f"t{k}")
+        df.write.parquet(target)
+        assert merge.retention_delete(
+            spark, target, "snapshot_date < DATE '2026-01-15'", **kw
+        ) == 2
+        assert [r.id for r in spark.read.parquet(target).collect()] == [2]
 
 
 def test_retention_delete_older_than_created_at(spark, tmp_path):
@@ -263,17 +274,103 @@ def test_sector_trends_keep_the_class_of_their_own_refresh(spark, tmp_path):
 
 
 def test_failed_refresh_leaves_no_cached_data(spark, tmp_path, bronze_path):
-    """A refresh whose item fetch raises keeps no persisted RDD behind."""
-    def persistent():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    """A successful, an empty-batch and a raising refresh each leave the
+    materialization pool and the persisted RDDs as they found them."""
+    def state():
+        rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+        return lifecycle.pool_size(), rdds
 
     def fetch(url: str):
         raise ConnectionError("item API down")
 
-    held = persistent()
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "raw.json").write_text(json.dumps({"auctions": []}))
+    held = state()
+    run_pipeline(spark, bronze_path, str(tmp_path / "ok"), SNAP, item_fetch=_fake_item_fetch)
+    assert state() == held
+    meta = run_pipeline(spark, str(empty), str(tmp_path / "ok"), SNAP, item_fetch=_fake_item_fetch)
+    assert meta["silver_inserted"] == 0
+    assert state() == held
     with pytest.raises(ConnectionError):
         run_pipeline(spark, bronze_path, str(tmp_path / "wh"), SNAP, item_fetch=fetch)
-    assert persistent() == held
+    assert state() == held
+
+
+def test_dim_last_updated_does_not_shift_with_the_process_time_zone(
+    spark, tmp_path, bronze_path, monkeypatch
+):
+    """enrich_items stamps a naive UTC time; the dim stores that instant
+    whatever the local zone of the Python process is."""
+    stamp = dt.datetime(2026, 2, 1, 12, 0)
+    real = rest.enrich_items
+    monkeypatch.setattr(
+        rest, "enrich_items", lambda fetch, ids, **kw: real(fetch, ids, now=lambda: stamp)
+    )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        run_pipeline(spark, bronze_path, str(tmp_path / "wh"), SNAP, item_fetch=_fake_item_fetch)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    stored = spark.read.parquet(str(tmp_path / "wh" / "dim_items")).select(
+        F.col("last_updated").cast("long")
+    )
+    assert {r[0] for r in stored.collect()} == {calendar.timegm(stamp.timetuple())}
+
+
+# Spark jobs of the second-day refresh below, counted when the day's JSON
+# came to be parsed once and tables read with declared schemas.
+SECOND_DAY_JOBS = 35
+
+
+def test_second_day_refresh_job_ceiling(spark, tmp_path, monkeypatch):
+    """A second-day refresh (relisted auctions, a new item to enrich into
+    an existing dim, a retention delete) stays within its Spark job count,
+    and the dim batch reaches the upsert as a local relation."""
+    wh = str(tmp_path / "wh")
+    d1, d2 = SNAP, SNAP + dt.timedelta(days=1)
+    day1 = _auctions(1, [19019, 2589, 2589])
+    run_pipeline(spark, _bronze_day(tmp_path, d1, day1), wh, d1, item_fetch=_fake_item_fetch)
+
+    plans = []
+    real_upsert = merge.upsert
+
+    def spy(spark_, target, batch, *a, **kw):
+        plans.append(batch._jdf.queryExecution().analyzed().toString())
+        return real_upsert(spark_, target, batch, *a, **kw)
+
+    monkeypatch.setattr(merge, "upsert", spy)
+    bronze = _bronze_day(tmp_path, d2, day1[:2] + _auctions(2, [19019, 5000, 777]))
+    sc = spark.sparkContext
+    group = f"second-day-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "second-day refresh")
+    try:
+        meta = run_pipeline(spark, bronze, wh, d2, item_fetch=_fake_item_fetch, retention_days=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert (meta["silver_inserted"], meta["dim_enriched"], meta["retention_deleted"]) == (3, 1, 3)
+    [plan] = plans
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert len(jobs) <= SECOND_DAY_JOBS, len(jobs)
+
+
+def test_dim_stays_one_file_across_refreshes(spark, tmp_path):
+    """Three refreshes that each enrich new items leave dim_items as one
+    parquet file holding every enriched item once."""
+    wh = str(tmp_path / "wh")
+    for k in range(3):
+        day = SNAP + dt.timedelta(days=k)
+        items = [2589, 5000 + 2 * k, 5001 + 2 * k]
+        meta = run_pipeline(spark, _bronze_day(tmp_path, day, _auctions(k + 1, items)), wh, day,
+                            item_fetch=_fake_item_fetch)
+        assert meta["dim_enriched"] == (3 if k == 0 else 2)
+    dim = os.path.join(wh, "dim_items")
+    assert len([f for f in os.listdir(dim) if f.endswith(".parquet")]) == 1
+    ids = [r.item_id for r in spark.read.parquet(dim).collect()]
+    assert sorted(ids) == [2589, 5000, 5001, 5002, 5003, 5004, 5005]
 
 
 def test_overwrite_partitions_leaves_full_overwrites_full(spark, tmp_path):
