@@ -38,6 +38,19 @@ reads parquet footers to infer one. The enriched dim rows become a local
 relation (`dim_frame`), which Catalyst sizes and broadcasts without
 Python workers, and whose naive `last_updated` stamps read as UTC
 whatever the process's time zone.
+
+A refresh is also priced in generated classes: Spark compiles each
+physical plan's Java with Janino, about 17 ms a class, and caches the
+classes by source text (sized in `session.get_spark`).
+`meta["codegen_compiles"]` counts the classes compiled during a run. Once
+a first refresh has filled the cache, a new day still compiles 16 (eight
+stages, each compiled once for the driver and once for the executors),
+because codegen inlines a date or id literal into the source of these
+stages: `silver_transform`'s date column, the insert's id prune bound,
+the day-slice filter (`snapshot_date = D`) feeding A1/A5 and, joined
+with the dim, A7, the `snapshot_date = D` filter on A3's, A4's and A6's
+output, and the retention cutoff. A3's `p_date` floor costs no class: it
+is a partition filter, applied when the scan is planned.
 """
 
 from __future__ import annotations
@@ -91,8 +104,12 @@ def run_pipeline(
     """Materialize one snapshot end-to-end; returns run metadata (the
     reference emits the same counts as Dagster metadata —
     ingestion.py:44-51, transformation.py:77-84). ``meta["gold_dates"]``
-    maps each gold table to the ISO dates this run wrote."""
+    maps each gold table to the ISO dates this run wrote;
+    ``meta["codegen_compiles"]`` is the number of classes Spark's codegen
+    compiled while it ran. That counter is process-wide, so queries run
+    concurrently from other threads are counted too."""
     meta: dict[str, Any] = {"snapshot_date": str(snapshot_date)}
+    compiled = _codegen_compiles(spark)
     silver_path = os.path.join(warehouse, "silver_auctions")
     dim_path = os.path.join(warehouse, "dim_items")
 
@@ -152,7 +169,14 @@ def run_pipeline(
     meta["retention_deleted"] = merge.retention_delete(
         spark, silver_path, f"snapshot_date < DATE '{cutoff}'", schema=silver_schema
     )
+    meta["codegen_compiles"] = _codegen_compiles(spark) - compiled
     return meta
+
+
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Classes compiled by Spark's codegen in this JVM so far."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def dim_frame(spark: SparkSession, rows: list[dict[str, Any]]) -> DataFrame:

@@ -357,6 +357,29 @@ def test_second_day_refresh_job_ceiling(spark, tmp_path, monkeypatch):
     assert len(jobs) <= SECOND_DAY_JOBS, len(jobs)
 
 
+# Classes Spark compiled on each of the third and fourth refreshes below:
+# 14-16 measured once the codegen cache held the program's working set,
+# 157-160 when its default 100 entries evicted them every refresh.
+LATER_DAY_COMPILES = 20
+
+
+def test_later_day_refreshes_reuse_generated_code(spark, tmp_path):
+    """Once two refreshes have run, a new day compiles only the classes
+    whose source inlines that day's date or id literals, not the whole
+    refresh again."""
+    from azeroth_data_platform_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    wh = str(tmp_path / "wh")
+    compiles = []
+    for k in range(4):
+        day = dt.date(2026, 3, 1) + dt.timedelta(days=k)
+        bronze = _bronze_day(tmp_path, day, _auctions(k + 1, [19019, 2589, 5000]))
+        meta = run_pipeline(spark, bronze, wh, day, item_fetch=_fake_item_fetch)
+        compiles.append(meta["codegen_compiles"])
+    assert max(compiles[2:]) <= LATER_DAY_COMPILES, compiles
+
+
 def test_dim_stays_one_file_across_refreshes(spark, tmp_path):
     """Three refreshes that each enrich new items leave dim_items as one
     parquet file holding every enriched item once."""
